@@ -1,33 +1,33 @@
 """Batched top-k query — the analog of flatnav's batched ``search``
 (python-bindings/src/flatnav/bindings.cpp:161-228: thread fan-out over
 queries against a shared read-only index). Here the read-only index is the
-postings parquet, the fan-out is Spark task parallelism over posting
-blocks, and the per-query state is a numpy top-k heap per task.
+postings parquet, and the per-query state is a numpy top-k heap per pass.
 
-Plan shape — ONE shuffle on the hot path, no join:
+One planner (_candidates) answers every exact top-k call:
 
-  1. tokenize queries with the index's tokenizer (same UDF as build),
-     join term_stats for df — the query-term table is tiny (bounded by the
-     query batch), so it is collected and closure-broadcast to every task,
-     the analog of flatnav's shared read-only index + per-thread queries.
-  2. postings scan filtered to the batch's terms — literal ``term IN``
-     for small sets, broadcast LEFT SEMI join + [min,max] range predicate
-     above LARGE_TERM_SET (row-group pruning on the term-sorted layout
-     either way) — only segments of query terms are read and shuffled.
-  3. exact zero-job contiguous range partition on chunk_id
-     (flatnav_spark/partitioning.py — no repartitionByRange sampling
-     job), sortWithinPartitions(chunk_id, term),
-     mapInPandas scorer: each task walks its chunks in order; per chunk it
-     decodes every needed row's postings in ONE concatenated varint pass,
-     then scores the chunk's blocks ascending, accumulating contributions
-     for all queries (vectorized per (term, query) pair, ascending term
-     order per doc — the determinism contract shared with
-     flatnav_spark.reference). Because chunk_id = doc_id // (block_range *
-     chunk_blocks) is term-independent, a doc's full score is computed in
-     exactly one task.
-  4. per-task per-query top-k (k rows out per query per task), then a
-     final window row_number() over (score desc, doc_id asc) <= k — the
-     Q4 sort+truncate analog (Index.h:402-406) with explicit tie-breaking.
+  1. resolve query terms DRIVER-SIDE: tokenize (the pure tokenizer of the
+     build) and look up each term's df, from the preloaded stats cache or
+     one filtered stats read. The batch's estimated postings Σdf follow.
+  2. pick the regime from Σdf alone. At most DIRECT_MAX_POSTINGS: read
+     only the query terms' row groups with pyarrow and run the scorer
+     kernel in-process — no Spark job. Above: the Spark pass — postings
+     scan filtered to the batch's terms (literal ``term IN``, or broadcast
+     LEFT SEMI join + [min,max] range above LARGE_TERM_SET), exact
+     zero-job contiguous range partition on chunk_id
+     (flatnav_spark/partitioning.py), sortWithinPartitions(chunk_id, term),
+     mapInPandas scorer.
+  3. the kernel (_make_partition_scorer) walks its chunks in order; per
+     chunk it decodes every needed row's postings in ONE concatenated
+     varint pass, then scores the chunk's blocks ascending, accumulating
+     contributions for all queries in ascending term order per doc — the
+     determinism contract shared with flatnav_spark.reference. Because
+     chunk_id = doc_id // (block_range * chunk_blocks) is term-independent,
+     a doc's full score is computed in exactly one task, so both regimes
+     return the same float64 scores.
+  4. per-pass per-query top-k, then the final (score desc, doc_id asc)
+     rank <= k — a window row_number() in the Spark regime, pandas when
+     driver-direct: the Q4 sort+truncate analog (Index.h:402-406) with
+     explicit tie-breaking.
 
 Scoring is pluggable (flatnav_spark.scorer.SCORERS — the L2/IP
 distance-interface analog): the index stores raw (tf, dl, df), so BM25 and
@@ -35,24 +35,22 @@ TF-IDF-IP both run against one index, selected per query batch.
 
 Block-max WAND pruning (``prune=True``) — the early-termination analog of
 beamSearch's ``max_dist`` cutoff (Index.h:630-632), lossless and
-SINGLE-pass: within a task, the per-query threshold t_k from blocks
+SINGLE-pass: within a pass, the per-query threshold t_k from blocks
 already scored only grows; a later block whose metadata upper bound
 (sum of weight * tfn_upper over the query's terms, float-safety inflated)
-is strictly below t_k provably cannot change the top-k — the global
-k-th score is >= any task-local k-th score. Skipped work is counted via
-accumulators (the ``_distance_computations`` analog, Index.h:83-84).
+is strictly below t_k provably cannot change the top-k. Skipped work is
+counted (the ``_distance_computations`` analog, Index.h:83-84).
 
-Memory discipline (round-2 fix): the per-block accumulator is sized to
-(block_range x ACTIVE queries in that block), not the whole batch, and
-``batch_query`` chunks query sets above ``max_queries_per_pass`` — per-task
-memory is flat in the total query count. The WAND bookkeeping itself is
-vectorized (one np.add.at over a precomputed CSR of (term -> queries)) and
-skipped entirely while no query has a full top-k yet, so pruning costs
-~nothing when it cannot help (the round-1 N32 regression).
+Memory discipline: the per-block accumulator is sized to (block_range x
+ACTIVE queries in that block), and the Spark regime chunks query sets
+above ``max_queries_per_pass``. The WAND bookkeeping is vectorized and
+skipped while no query has a full top-k yet.
 """
 
 from __future__ import annotations
 
+import os
+from bisect import bisect_left
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
@@ -62,7 +60,6 @@ from flatnav_spark.codec import varint_decode
 from flatnav_spark.index_io import LoadedIndex
 from flatnav_spark.partitioning import repartition_dense_range
 from flatnav_spark.scorer import get_scorer
-from flatnav_spark.tokenizer import make_tokenize_udf
 
 # multiplicative + absolute inflation of upper bounds: guards against
 # summation-order float drift between the metadata-side bound and the
@@ -186,18 +183,13 @@ def _make_partition_scorer(
     whole blocks, sub-runs ("segments" — the old (term, block) decode
     unit), and (query, block) pairs.
 
-    ``seed_thr`` (round-3 VERDICT #6) pre-loads each query's threshold
-    with a GLOBAL lower bound on its final k-th score (the k-th score
-    attained on a prefix of chunks, measured by a cheap pre-pass). Without
-    it thresholds are task-local and start at -inf, so pruning decays as
-    tasks multiply (each task's top-k fills later — prune frac 0.29 at 8
-    tasks -> 0.08 at 32 on zipf:1M, -> ~0 at cluster scale). A seeded
-    threshold is parallelism-independent: every task prunes from its first
-    block. Lossless: the final k-th score is >= any attained k-th score,
-    and pruning only skips bounds STRICTLY below the threshold, so
-    score-ties (which can still enter top-k via the doc_id tie-break)
-    survive. Thresholds only grow: task-local updates take max() with the
-    seed.
+    ``seed_thr`` pre-loads each query's threshold with a GLOBAL lower
+    bound on its final k-th score (the analytic floor, or a service's
+    cached k-th score). Without it thresholds are task-local and start at
+    -inf, so pruning decays as tasks multiply (prune frac 0.29 at 8 tasks
+    -> 0.08 at 32 on zipf:1M). Lossless: pruning only skips bounds
+    STRICTLY below the threshold, so score-ties survive. Thresholds only
+    grow: task-local updates take max() with the seed.
 
     ``approx_factor`` (theta >= 1.0) is the classic WAND threshold factor
     F (Broder et al., CIKM 2003 §6): prune when ub < thr * theta instead
@@ -438,28 +430,6 @@ def _make_partition_scorer(
     return score_partition
 
 
-def _query_terms(spark, index: LoadedIndex, queries_df):
-    """(query_id, term, df) for query terms that exist in the index.
-
-    The broadcast of the (tiny) query-term set into the term_stats join is
-    the analog of flatnav's broadcastable entry-point stats (B4,
-    Index.h:845-870). Kept as the distributed formulation for callers
-    that hold a non-collectable queries_df; _resolve_query_terms uses the
-    driver-side form on the hot path."""
-    from pyspark.sql import functions as F
-
-    tokenize = make_tokenize_udf(index.manifest.tokenizer_mode)
-    q_terms = (
-        queries_df.select("query_id", F.explode(tokenize(F.col("query_text"))).alias("term"))
-        .distinct()
-    )
-    stats = index.term_stats(spark)
-    cols = ["query_id", "term", "df"] + [
-        c for c in ("floor_dl10", "floor_dl100") if c in stats.columns
-    ]
-    return stats.join(F.broadcast(q_terms), "term").select(*cols)
-
-
 def _stats_rows_for_terms(spark, index: LoadedIndex, terms: List[str]):
     """One column-pruned, row-group-pruned read of the stats table
     restricted to ``terms`` (sorted): literal IN below LARGE_TERM_SET,
@@ -485,16 +455,10 @@ def _stats_rows_for_terms(spark, index: LoadedIndex, terms: List[str]):
 
 def _resolve_query_terms(spark, index: LoadedIndex, queries_df):
     """qt_rows for a query batch, resolved DRIVER-SIDE: the tokenizer is
-    a pure function (tokenizer.py), so query texts collect (job-free for
-    the usual local-relation batch), tokenize on the driver, and their
-    stats come from either the preloaded cache (standing services — zero
-    jobs) or ONE narrow filtered read of the term-stats table. The old
-    formulation ran the tokenizer as an ArrowEvalPython node inside a
-    stats-join job — a Python-worker round trip per batch for work the
-    driver does in microseconds (guide §4: eliminate the boundary, not
-    just vectorize it). Row order differs from the join form but scoring
-    is order-invariant (each (term, query) contribution lands in its own
-    accumulator slot); rank-identity is pinned by tests."""
+    a pure function (tokenizer.py), so query texts collect and tokenize on
+    the driver (_qt_rows_driver) — no Python-worker round trip for work
+    the driver does in microseconds (guide §4: eliminate the boundary,
+    not just vectorize it)."""
     pairs = [
         (r.query_id, r.query_text)
         for r in queries_df.select("query_id", "query_text").collect()
@@ -510,50 +474,28 @@ def _resolve_query_terms(spark, index: LoadedIndex, queries_df):
 AUTO_PRELOAD_MAX_TERMS = 2_000_000
 
 
-def _qt_rows_driver(spark, index: LoadedIndex, pairs):
-    """Driver-side qt_rows for [(query_id, query_text)] pairs — cache hit
-    is zero jobs, cache miss is one filtered stats read (or, below
-    AUTO_PRELOAD_MAX_TERMS, a one-time full preload amortized across
-    every later batch on this handle)."""
+def _qt_rows_driver(spark, index: LoadedIndex, pairs) -> List[dict]:
+    """Driver-side qt_rows for [(query_id, query_text)] pairs — the single
+    implementation behind every query path, so batched and single-query
+    results stay bit-identical by construction. Stats come from the
+    preloaded cache (zero jobs) or ONE filtered stats read; below
+    AUTO_PRELOAD_MAX_TERMS the cache is armed once and amortized across
+    every later batch on this handle."""
+    from flatnav_spark.tokenizer import get_tokenizer
+
     if index._stats_cache is None and index.manifest.n_terms <= AUTO_PRELOAD_MAX_TERMS:
         index.preload_term_stats(spark)
-    if index._stats_cache is not None:
-        return _qt_rows_from_cache(index, pairs)
-    from flatnav_spark.tokenizer import get_tokenizer
-
     tok = get_tokenizer(index.manifest.tokenizer_mode)
-    terms_of = {
-        int(qid): sorted(set(tok(text)) if isinstance(text, str) else set())
-        for qid, text in pairs
-    }
-    all_terms = sorted(set().union(*terms_of.values())) if terms_of else []
-    rows = _stats_rows_for_terms(spark, index, all_terms)
-    stats_of = {r["term"]: r for r in rows}
-    cols = [c for c in ("df", "floor_dl10", "floor_dl100")
-            if rows and c in rows[0].__fields__]
-    return [
-        {"query_id": qid, "term": t, **{c: stats_of[t][c] for c in cols}}
-        for qid, ts in terms_of.items()
-        for t in ts
-        if t in stats_of
-    ]
-
-
-def _qt_rows_from_cache(index: LoadedIndex, pairs) -> List[dict]:
-    """Driver-side qt_rows from the preloaded stats cache for [(query_id,
-    query_text)] pairs — the single implementation behind both the
-    batched and the single-query (query_one) fast paths, so the two stay
-    bit-identical by construction."""
-    from flatnav_spark.tokenizer import get_tokenizer
-
-    cache = index._stats_cache
-    tok = get_tokenizer(index.manifest.tokenizer_mode)
-    return [
-        {"query_id": int(qid), "term": t, **cache[t]}
-        for qid, text in pairs
-        for t in sorted(set(tok(text)))
-        if t in cache
-    ]
+    terms_of = [(int(qid), sorted(set(tok(text)) if isinstance(text, str) else ()))
+                for qid, text in pairs]
+    stats_of = index._stats_cache
+    if stats_of is None:
+        rows = _stats_rows_for_terms(
+            spark, index, sorted(set().union(*(ts for _, ts in terms_of))))
+        stats_of = {r["term"]: {c: r[c] for c in r.__fields__ if c != "term"}
+                    for r in rows}
+    return [{"query_id": qid, "term": t, **stats_of[t]}
+            for qid, ts in terms_of for t in ts if t in stats_of]
 
 
 def _score_floor_by_qid(qt_rows, m, scorer, k: int) -> Dict[int, float]:
@@ -569,10 +511,9 @@ def _score_floor_by_qid(qt_rows, m, scorer, k: int) -> Dict[int, float]:
     Honest measurement (zipf:1M, k=10): the floor reaches ~12% of the true
     k-th score at the median — enough to keep some pruning alive at any
     task count, not enough to match task-local thresholds once they fill
-    (seg prune frac 0.34 at 8 tasks vs 0.10 at 32 either way). The
-    sampling pre-pass alternative measured net-negative (_seed_thresholds
-    docstring); threshold REUSE across batches (seed_thr_by_qid) is the
-    scale path for standing query services."""
+    (seg prune frac 0.34 at 8 tasks vs 0.10 at 32 either way). A sampling
+    pre-pass measured net-negative and was removed; threshold REUSE across
+    batches (seed_thr_by_qid) is the scale path for standing services."""
     max_dl = int(m.metrics.get("max_dl", 0) or 0)
     if not qt_rows:
         return {}
@@ -619,16 +560,31 @@ LARGE_TERM_SET = 1024  # above this, IN-list literals bloat the plan
 # costs the same logical job at any parallelism.
 TARGET_POSTINGS_PER_TASK = 65536
 
+# Regime boundary: a batch whose estimated postings are at most this runs
+# DRIVER-DIRECT (no Spark job); above it, the Spark pass. Measured,
+# batch_query + collect, local[4], 20k-doc zipf index (4.9M postings),
+# strata query mix, median of 3, identical results at every size:
+#     Σdf          6k    37k   174k   540k   1.42M  2.25M
+#     Spark pass   1.23  1.10  1.51   2.31   4.48   9.00 s
+#     direct       0.47  0.47  0.64   1.12   3.28   6.42 s
+# A sweep on a faster 4-core host crossed over near Σdf 1.5M (1.76M:
+# Spark 1.64 s, direct 1.97 s), and the Spark pass gains with every core
+# while the direct regime runs on one — so the bound is 2^19 (~524k),
+# where driver-direct won ~2x on both hosts.
+DIRECT_MAX_POSTINGS = 8 * TARGET_POSTINGS_PER_TASK
 
-def _pass_partitions(spark, qt_rows, num_partitions: Optional[int]) -> int:
-    """Resolve the scoring-pass partition count: explicit wins; otherwise
-    size to the batch's estimated posting volume (sum of query-term dfs —
-    exact when queries don't share terms, an upper bound when they do)."""
-    if num_partitions is not None:
-        return num_partitions
-    est = sum(int(r["df"]) for r in {r["term"]: r for r in qt_rows}.values())
-    cap = spark.sparkContext.defaultParallelism
-    return max(1, min(cap, -(-est // TARGET_POSTINGS_PER_TASK)))
+RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
+_METRICS = ("blocks_scored", "blocks_pruned", "segments_scored",
+            "segments_pruned", "pairs_scored", "pairs_pruned")
+
+
+class _Counter:
+    """Driver-local stand-in for a Spark accumulator (same add/value)."""
+
+    value = 0
+
+    def add(self, n: int) -> None:
+        self.value += n
 
 
 def _filter_postings_to_terms(spark, postings, terms: List[str]):
@@ -653,6 +609,36 @@ def _filter_postings_to_terms(spark, postings, terms: List[str]):
     )
 
 
+def _read_segments(index: LoadedIndex, terms: List[str], cols: List[str]) -> pd.DataFrame:
+    """Driver-direct postings read: only the row groups whose [min, max]
+    term statistics can hold one of ``terms`` (sorted ascending) are read,
+    and only their rows of those terms, projected to ``cols``. Same local
+    path access as build's driver-side samplers (partitioning.py)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    def may_hold(st) -> bool:
+        if not st or "min" not in st:
+            return True
+        i = bisect_left(terms, st["min"])
+        return i < len(terms) and terms[i] <= st["max"]
+
+    flt = pc.field("term").isin(terms)
+    tables = []
+    for d in index.manifest.postings_dirs if terms else ():
+        for frag in ds.dataset(os.path.join(index.path, d), format="parquet").get_fragments():
+            frag.ensure_complete_metadata()
+            rgs = [rg.id for rg in frag.row_groups if may_hold(rg.statistics.get("term"))]
+            if rgs:
+                tables.append(frag.subset(row_group_ids=rgs).to_table(columns=cols, filter=flt))
+    if not tables:
+        return pd.DataFrame(columns=cols)
+    return (pa.concat_tables(tables, promote_options="permissive")
+            .sort_by([("chunk_id", "ascending"), ("term", "ascending")])
+            .to_pandas())
+
+
 def _n_chunks_upper(m) -> int:
     """Upper bound on the index's chunk-id space, from lineage markers
     (extend rounds doc ids up to chunk boundaries, so n_docs alone can
@@ -668,17 +654,15 @@ def _n_chunks_upper(m) -> int:
     return max(1, -(-hi // span))
 
 
-def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
-              accs, chunk_lt: Optional[int] = None,
-              seed_thr_by_qid: Optional[Dict[int, float]] = None,
-              approx_factor: float = 1.0):
-    """One scoring pass over the postings for a bounded chunk of queries.
-
-    ``chunk_lt`` restricts the pass to chunks [0, chunk_lt) — the seed
-    pre-pass mode. ``seed_thr_by_qid`` maps query_id -> global threshold
-    lower bound to start every task at (see _make_partition_scorer)."""
-    from pyspark.sql import functions as F
-
+def _pass_kernel(index, qt_rows, k, prune, scorer_name, counters,
+                 seed_thr_by_qid: Optional[Dict[int, float]],
+                 approx_factor: float):
+    """(sorted terms, scorer kernel, postings columns it reads) for one
+    scoring pass over ``qt_rows``' queries — shared by both regimes, so
+    they score with the same thresholds, seeds and accumulation order.
+    ``seed_thr_by_qid`` maps query_id -> global threshold lower bound to
+    start from (see _make_partition_scorer); with ``prune`` it is
+    max-combined with the analytic floor."""
     m = index.manifest
     scorer = get_scorer(scorer_name)
     qids = sorted({r["query_id"] for r in qt_rows})
@@ -688,13 +672,6 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
         w = scorer.weight(int(r["df"]), m.n_docs)
         qmap.setdefault(r["term"], []).append((q_index[r["query_id"]], w))
     plan = _QueryPlan(qmap)
-
-    postings = _filter_postings_to_terms(spark, index.postings(spark), plan.terms)
-    n_chunks = _n_chunks_upper(m)
-    if chunk_lt is not None:
-        postings = postings.filter(F.col("chunk_id") < chunk_lt)
-        n_chunks = min(n_chunks, chunk_lt)
-        num_partitions = max(1, min(num_partitions, chunk_lt))
     seed_thr = None
     if seed_thr_by_qid:
         seed_thr = np.array(
@@ -707,9 +684,28 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
             seed_thr = f_arr if seed_thr is None else np.maximum(seed_thr, f_arr)
     part_scorer = _make_partition_scorer(
         plan, np.array(qids, dtype=np.int64), m.avgdl, m.params, scorer_name,
-        m.block_range, m.chunk_blocks, k, prune, *accs, seed_thr=seed_thr,
+        m.block_range, m.chunk_blocks, k, prune, *counters, seed_thr=seed_thr,
         approx_factor=approx_factor,
     )
+    # only the columns the kernel reads (guide §4: Spark cannot see inside
+    # mapInPandas, so unused columns — n, sum_tf, payload_len, max_dl, and
+    # the two block-bound arrays on the exact path — would be scanned,
+    # shuffled and serialized to Python for nothing)
+    cols = ["term", "chunk_id", "block_ids", "block_counts",
+            "docs_bin", "tfs_bin", "dls_bin"]
+    if prune:
+        cols[4:4] = ["block_max_tf", "block_min_dl"]
+    return plan.terms, part_scorer, cols
+
+
+def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
+              counters, seed_thr_by_qid, approx_factor):
+    """Spark regime: one scoring pass for a bounded chunk of queries, as
+    a lazy DataFrame of per-task (query_id, doc_id, score) candidates."""
+    terms, part_scorer, cols = _pass_kernel(
+        index, qt_rows, k, prune, scorer_name, counters, seed_thr_by_qid,
+        approx_factor)
+    postings = _filter_postings_to_terms(spark, index.postings(spark), terms)
     # Contiguous RANGE partitioning, not hash: with n_chunks within a
     # small factor of the task count, hash collisions leave some tasks
     # with 2-4x the chunks of others. repartitionByRange would balance
@@ -718,54 +714,72 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
     # vs round 2); chunk ids are dense, so repartition_dense_range
     # computes the same contiguous ranges exactly, with zero extra jobs,
     # deterministic at any parallelism (flatnav_spark/partitioning.py).
-    # Project to the columns the kernel actually reads BEFORE the
-    # exchange and the Arrow hop (guide §4: Spark cannot see inside
-    # mapInPandas, so unused columns — n, sum_tf, payload_len, max_dl,
-    # and the two block-bound arrays on the exact path — would be
-    # scanned, shuffled and serialized to Python for nothing).
-    cols = ["term", "chunk_id", "block_ids", "block_counts",
-            "docs_bin", "tfs_bin", "dls_bin"]
-    if prune:
-        cols[4:4] = ["block_max_tf", "block_min_dl"]
     part = repartition_dense_range(postings.select(*cols), "chunk_id",
-                                   n_chunks, num_partitions)
+                                   _n_chunks_upper(index.manifest), num_partitions)
     return part.sortWithinPartitions("chunk_id", "term").mapInPandas(
         part_scorer, "query_id long, doc_id long, score double"
     )
 
 
-SEED_MIN_CHUNKS = 8   # below this a seed pre-pass costs more than it saves
-SEED_PREFIX_DIV = 32  # seed prefix = n_chunks // 32 chunks (>= 1): ~3% scan
+def _candidates(spark, index, qt_rows, k, prune, num_partitions, scorer,
+                collect_metrics, seed_thr_by_qid, approx_factor,
+                max_queries_per_pass):
+    """The query planner. Picks the regime from the batch's estimated
+    postings alone — Σdf over its distinct terms, exact when queries share
+    no terms and an upper bound when they do:
+
+      * DRIVER-DIRECT (Σdf <= DIRECT_MAX_POSTINGS): the query terms' row
+        groups, sorted by (chunk_id, term), run through the scorer kernel
+        in-process as one stream — no Spark job;
+      * SPARK: one pass per ``max_queries_per_pass`` queries, over
+        ``num_partitions`` tasks (default: Σdf / TARGET_POSTINGS_PER_TASK,
+        clamped to [1, defaultParallelism]).
+
+    Returns (candidates, metrics): (query_id, doc_id, score) rows holding
+    each query's top-k — pandas when driver-direct, else a lazy Spark
+    DataFrame — and the _METRICS counters (``.value``), or None without
+    ``collect_metrics``."""
+    seeds = seed_thr_by_qid if prune else None
+    est = sum(int(r["df"]) for r in {r["term"]: r for r in qt_rows}.values())
+    direct = est <= DIRECT_MAX_POSTINGS
+    counters = tuple(
+        None if not collect_metrics
+        else _Counter() if direct else spark.sparkContext.accumulator(0)
+        for _ in _METRICS
+    )
+    if direct:
+        terms, part_scorer, cols = _pass_kernel(
+            index, qt_rows, k, prune, scorer, counters, seeds, approx_factor)
+        cand = next(part_scorer(iter([_read_segments(index, terms, cols)])))
+    else:
+        if num_partitions is None:
+            num_partitions = max(1, min(spark.sparkContext.defaultParallelism,
+                                        -(-est // TARGET_POSTINGS_PER_TASK)))
+        all_qids = sorted({r["query_id"] for r in qt_rows})
+        cand = None
+        for lo in range(0, len(all_qids), max_queries_per_pass):
+            chunk = set(all_qids[lo: lo + max_queries_per_pass])
+            rows = [r for r in qt_rows if r["query_id"] in chunk]
+            part = _run_pass(spark, index, rows, k, prune, num_partitions,
+                             scorer, counters, seeds, approx_factor)
+            cand = part if cand is None else cand.unionByName(part)
+    return cand, (dict(zip(_METRICS, counters)) if collect_metrics else None)
 
 
-def _seed_thresholds(spark, index, qt_rows, k, num_partitions, scorer_name,
-                     accs) -> Optional[Dict[int, float]]:
-    """Cheap global WAND seed (round-3 VERDICT #6): score a small PREFIX of
-    chunks for the whole query batch and return each query's attained k-th
-    score — a parallelism-independent lower bound on its final k-th score,
-    broadcast (via the scorer closure) as every task's starting threshold.
-    Doc ids are hash-assigned, so a doc-id prefix is an unbiased corpus
-    sample and its k-th score sits close to the global one. Cost: one
-    narrow job over ~1/SEED_PREFIX_DIV of the postings; its scored/pruned
-    work is counted in the same accumulators (the seed is not free and the
-    metrics say so)."""
-    m = index.manifest
-    span = m.block_range * m.chunk_blocks
-    n_chunks = max(1, -(-m.n_docs // span))
-    if n_chunks < SEED_MIN_CHUNKS:
-        return None
-    s = max(1, n_chunks // SEED_PREFIX_DIV)
-    part = _run_pass(spark, index, qt_rows, k, True, num_partitions,
-                     scorer_name, accs, chunk_lt=s)
-    by_q: Dict[int, List[float]] = {}
-    for r in part.collect():  # <= k rows per query per task, tasks <= s
-        by_q.setdefault(int(r.query_id), []).append(float(r.score))
-    out = {}
-    for q, scores in by_q.items():
-        if len(scores) >= k:
-            scores.sort(reverse=True)
-            out[q] = scores[k - 1]
-    return out or None
+def _rank(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Final top-k of candidates in pandas: per query, (score desc, doc_id
+    asc) rank <= k — the order of the Spark regime's final window."""
+    r = cand.sort_values(["query_id", "score", "doc_id"],
+                         ascending=[True, False, True])
+    rank = r.groupby("query_id").cumcount().to_numpy(np.int32) + 1
+    return r.assign(rank=rank)[rank <= k][["query_id", "rank", "doc_id", "score"]]
+
+
+def _check_args(scorer: str, approx_factor: float) -> None:
+    get_scorer(scorer)  # validate early
+    if approx_factor < 1.0:
+        raise ValueError(
+            f"approx_factor must be >= 1.0 (1.0 = exact), got {approx_factor}")
 
 
 def batch_query(
@@ -778,7 +792,6 @@ def batch_query(
     collect_metrics: bool = False,
     scorer: str = "bm25",
     max_queries_per_pass: int = DEFAULT_MAX_QUERIES_PER_PASS,
-    seed_thresholds: bool = False,
     seed_thr_by_qid: Optional[Dict[int, float]] = None,
     approx_factor: float = 1.0,
     _qt_rows=None,
@@ -788,17 +801,15 @@ def batch_query(
 
     Returns (query_id, rank, doc_id, score) — rank 1-based, score desc,
     ties by ascending doc_id. Queries with no indexed terms return no rows.
-    Query batches larger than ``max_queries_per_pass`` are chunked into
-    independent passes (unioned before the final top-k window), bounding
-    executor memory regardless of batch size.
+    The planner (_candidates) answers small batches driver-direct, with no
+    Spark job, and the rest as a Spark pass; ``num_partitions`` and
+    ``max_queries_per_pass`` size the Spark pass only (query batches
+    larger than ``max_queries_per_pass`` are chunked into independent
+    passes, unioned before the final top-k window, bounding executor
+    memory regardless of batch size).
 
-    With ``prune`` every task starts from the zero-cost analytic floor
-    (_score_floor_by_qid). ``seed_thresholds=True`` additionally runs the
-    chunk-prefix sampling pre-pass (_seed_thresholds) — measured NET
-    NEGATIVE on zipf:1M at k=10 (a 3%-sample k-th is a weak bound and the
-    extra scan costs more than the pruning it buys: +3.5s at N8 for +0.00
-    seg prune frac, +5s at N32 for +0.04), so it defaults off; it can pay
-    off for large k or very selective workloads.
+    With ``prune`` every pass starts from the zero-cost analytic floor
+    (_score_floor_by_qid).
 
     ``seed_thr_by_qid`` (query_id -> score) pre-seeds per-query WAND
     thresholds with externally-known lower bounds on each query's final
@@ -821,10 +832,7 @@ def batch_query(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    get_scorer(scorer)  # validate early
-    if approx_factor < 1.0:
-        raise ValueError(
-            f"approx_factor must be >= 1.0 (1.0 = exact), got {approx_factor}")
+    _check_args(scorer, approx_factor)
     # driver-side query-term table: bounded by the query batch
     # (|queries| x |terms per query|), never by corpus size; zero-job
     # with preloaded stats (_resolve_query_terms). _qt_rows is the
@@ -832,50 +840,53 @@ def batch_query(
     # that expand patterns into ordinary query terms themselves.
     qt_rows = (_qt_rows if _qt_rows is not None
                else _resolve_query_terms(spark, index, queries_df))
-    if not qt_rows:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
-    num_partitions = _pass_partitions(spark, qt_rows, num_partitions)
-
-    accs = tuple(
-        spark.sparkContext.accumulator(0) if collect_metrics else None
-        for _ in range(6)
-    )
-
-    all_qids = sorted({r["query_id"] for r in qt_rows})
-    cand = None
-    for lo in range(0, len(all_qids), max_queries_per_pass):
-        chunk = set(all_qids[lo: lo + max_queries_per_pass])
-        rows = [r for r in qt_rows if r["query_id"] in chunk]
-        seeds = (
-            _seed_thresholds(spark, index, rows, k, num_partitions, scorer, accs)
-            if prune and seed_thresholds else None
+    cand, metrics = _candidates(
+        spark, index, qt_rows, k, prune, num_partitions, scorer,
+        collect_metrics, seed_thr_by_qid, approx_factor, max_queries_per_pass)
+    if isinstance(cand, pd.DataFrame):
+        result = spark.createDataFrame(_rank(cand, k), RESULT_SCHEMA)
+    else:
+        w_final = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+        result = (
+            cand.withColumn("rank", F.row_number().over(w_final))
+            .filter(F.col("rank") <= k)
+            .select("query_id", F.col("rank").cast("int").alias("rank"), "doc_id", "score")
         )
-        if prune and seed_thr_by_qid:
-            seeds = dict(seeds or {})
-            for q, thr in seed_thr_by_qid.items():
-                if q in chunk and thr > seeds.get(q, -np.inf):
-                    seeds[q] = thr
-        part = _run_pass(spark, index, rows, k, prune, num_partitions, scorer,
-                         accs, seed_thr_by_qid=seeds,
-                         approx_factor=approx_factor)
-        cand = part if cand is None else cand.unionByName(part)
-
-    w_final = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    result = (
-        cand.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "doc_id", "score")
-    )
-    if collect_metrics:
-        result._flatnav_accumulators = {
-            "blocks_scored": accs[0],
-            "blocks_pruned": accs[1],
-            "segments_scored": accs[2],
-            "segments_pruned": accs[3],
-            "pairs_scored": accs[4],
-            "pairs_pruned": accs[5],
-        }
+    if metrics is not None:
+        result._flatnav_accumulators = metrics
     return result
+
+
+def query_pairs(
+    spark,
+    index: LoadedIndex,
+    pairs,
+    k: int = 10,
+    prune: bool = True,
+    num_partitions: Optional[int] = None,
+    collect_metrics: bool = False,
+    scorer: str = "bm25",
+    seed_thr_by_qid: Optional[Dict[int, float]] = None,
+    approx_factor: float = 1.0,
+):
+    """batch_query for driver-held [(query_id, query_text)] pairs, answered
+    driver-side as ({query_id: [(rank, doc_id, score)]}, metrics) —
+    metrics as in batch_query's ``_flatnav_accumulators``, or None. No
+    query DataFrame is built, so a driver-direct batch runs no Spark job
+    at all; a Spark-regime batch runs its pass and collects candidates."""
+    _check_args(scorer, approx_factor)
+    qt_rows = _qt_rows_driver(spark, index, pairs)
+    cand, metrics = _candidates(
+        spark, index, qt_rows, k, prune, num_partitions, scorer,
+        collect_metrics, seed_thr_by_qid, approx_factor,
+        DEFAULT_MAX_QUERIES_PER_PASS)
+    if not isinstance(cand, pd.DataFrame):
+        cand = cand.toPandas()
+    ranked = _rank(cand, k)
+    out: Dict[int, List[Tuple[int, int, float]]] = {}
+    for q, r, d, s in zip(*(ranked[c].tolist() for c in ranked.columns)):
+        out.setdefault(q, []).append((r, d, s))
+    return out, metrics
 
 
 def _lev_within(a: str, b: str, n: int) -> bool:
@@ -1084,31 +1095,14 @@ def query_one(spark, index: LoadedIndex, query_text: str, k: int = 10,
     """Single-query convenience — the ``searchSingle`` analog
     (bindings.cpp:121-159): returns [(rank, doc_id, score)], collected.
 
-    Latency fast path: skips batch_query's final window (one whole Spark
-    job) by collecting the per-task top-k candidates (≤ k rows per task)
-    and merging driver-side with the identical (score desc, doc_id asc)
-    order — bit-identical to batch_query (tested). Two Spark jobs total;
-    ONE if ``index.preload_term_stats(spark)`` was called first: the
-    tokenizer is a pure function (tokenizer.py), so the query's terms and
-    their stats resolve driver-side from the cache with no job at all —
-    the standing-service configuration. The latency harness in bench.py
-    times repeated calls of this."""
-    get_scorer(scorer)
-    if approx_factor < 1.0:
-        raise ValueError(
-            f"approx_factor must be >= 1.0 (1.0 = exact), got {approx_factor}")
-    qt_rows = _qt_rows_driver(spark, index, [(0, query_text)])
-    if not qt_rows:
-        return []
-    part = _run_pass(spark, index, qt_rows, k, prune,
-                     _pass_partitions(spark, qt_rows, None), scorer,
-                     (None,) * 6,
-                     seed_thr_by_qid=(
-                         {0: float(seed_thr)} if prune and seed_thr is not None
-                         else None),
-                     approx_factor=approx_factor)
-    cand = sorted(
-        ((float(r.score), int(r.doc_id)) for r in part.collect()),
-        key=lambda t: (-t[0], t[1]),
-    )[:k]
-    return [(rank + 1, doc_id, score) for rank, (score, doc_id) in enumerate(cand)]
+    The planner's one-query case (query_pairs), bit-identical to
+    batch_query (tested). A query under the driver-direct bound runs no
+    Spark job once the term stats are cached (preload_term_stats, or the
+    automatic preload below AUTO_PRELOAD_MAX_TERMS): tokenize, stats
+    lookup, the query terms' row groups and the scorer kernel all run
+    in-process. The latency harness in bench.py times repeated calls."""
+    seeds = None if seed_thr is None else {0: float(seed_thr)}
+    hits, _ = query_pairs(spark, index, [(0, query_text)], k=k, prune=prune,
+                          scorer=scorer, seed_thr_by_qid=seeds,
+                          approx_factor=approx_factor)
+    return hits.get(0, [])

@@ -35,7 +35,7 @@ from __future__ import annotations
 from typing import Dict, List, Optional, Tuple
 
 from flatnav_spark.index_io import LoadedIndex
-from flatnav_spark.query import batch_query, query_one
+from flatnav_spark.query import query_one, query_pairs
 
 
 def _index_stamp(index: LoadedIndex) -> tuple:
@@ -49,7 +49,9 @@ class StandingQueryService:
 
     ``search_batch`` answers a batch and feeds each answered query's k-th
     score back into the threshold cache; ``search_one`` is the
-    single-query latency path (one Spark job with the preloaded stats).
+    single-query latency path. Both go to the query planner with the
+    (query_id, text) pairs as given: under its driver-direct bound a call
+    runs no Spark job at all.
     ``thr_cache_size`` bounds driver memory: the cache evicts oldest
     entries FIFO past the cap (a threshold is a pure optimization — an
     evicted entry only costs prune efficiency on its next repeat)."""
@@ -113,36 +115,25 @@ class StandingQueryService:
         answered query updates it. Results are bit-identical to a cold
         batch_query (the seed is a true lower bound; tested)."""
         self._check_index()
-        qdf = self.spark.createDataFrame(
-            queries, "query_id long, query_text string")
         seeds = {
             qid: self._thr[text] for qid, text in queries if text in self._thr
         }
-        res = batch_query(
-            self.spark, self.index, qdf, k=self.k, prune=self.prune,
+        out, metrics = query_pairs(
+            self.spark, self.index, queries, k=self.k, prune=self.prune,
             num_partitions=self.num_partitions, scorer=self.scorer,
             collect_metrics=collect_metrics, seed_thr_by_qid=seeds or None,
             approx_factor=self.approx_factor,
         )
-        rows = res.collect()
         if collect_metrics:
-            self.last_metrics = {
-                name: int(a.value)
-                for name, a in res._flatnav_accumulators.items()
-            }
-        out: Dict[int, List[Tuple[int, int, float]]] = {}
-        for r in rows:
-            out.setdefault(int(r.query_id), []).append(
-                (int(r.rank), int(r.doc_id), float(r.score)))
+            self.last_metrics = {name: int(a.value) for name, a in metrics.items()}
         text_of = dict(queries)
         for qid, hits in out.items():
-            hits.sort()
             self._remember(text_of[qid], [s for _, _, s in hits])
         return out
 
     def search_one(self, query_text: str) -> List[Tuple[int, int, float]]:
-        """Single-query latency path: one Spark job (preloaded stats),
-        threshold-seeded when the text repeats, cache updated after."""
+        """Single-query latency path (query_one), threshold-seeded when
+        the text repeats, cache updated after."""
         self._check_index()
         hits = query_one(
             self.spark, self.index, query_text, k=self.k, prune=self.prune,

@@ -10,6 +10,45 @@ import os
 
 from pyspark.sql import SparkSession
 
+GIB = 1 << 30
+# the driver heap is at most this, and at most HEAP_SHARE of host memory:
+# the rest is left to the JVM's off-heap, the Python workers and tmpfs
+MAX_DRIVER_HEAP_GB = 48
+HEAP_SHARE = 0.5
+# pre-size the heap: the first heavy stage otherwise pays dozens of young
+# GCs while G1 grows the heap from its small initial size (observed via
+# -Xlog:gc during the zipf:200k merge). 16g covers the measured ~13g peak
+# at bench scale. It is committed at session start, so it is only set
+# when the heap it would pre-size fits at least this large.
+XMS_GB = 16
+
+_CGROUP_LIMITS = ("/sys/fs/cgroup/memory.max",
+                  "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def host_memory_bytes() -> int:
+    """Memory this process can actually use: MemAvailable, capped by the
+    cgroup limit when one is set (v2 or v1)."""
+    with open("/proc/meminfo") as f:
+        avail = next(int(line.split()[1]) * 1024 for line in f
+                     if line.startswith("MemAvailable:"))
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            avail = min(avail, int(raw))
+    return avail
+
+
+def driver_memory_conf(host_bytes: int) -> tuple[str, str | None]:
+    """(spark.driver.memory, -Xms option or None) for a host with
+    ``host_bytes`` usable memory."""
+    heap_gb = max(1, min(MAX_DRIVER_HEAP_GB, int(host_bytes * HEAP_SHARE) // GIB))
+    return f"{heap_gb}g", (f"-Xms{XMS_GB}g" if heap_gb >= XMS_GB else None)
+
 
 def get_spark(
     app_name: str = "flatnav_spark",
@@ -21,6 +60,17 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cores), 8)
+    extra_conf = dict(extra_conf or {})
+    driver_mem = os.environ.get("FLATNAV_SPARK_DRIVER_MEM")
+    java_opts = os.environ.get("FLATNAV_SPARK_DRIVER_JAVA_OPTS")
+    if driver_mem is None or java_opts is None:
+        auto_mem, auto_xms = driver_memory_conf(host_memory_bytes())
+        driver_mem = driver_mem or auto_mem
+        if java_opts is None:
+            java_opts = auto_xms
+    # a caller's JVM options extend ours (later flags win), never drop them
+    caller_opts = extra_conf.pop("spark.driver.extraJavaOptions", None)
+    java_opts = " ".join(o for o in (java_opts, caller_opts) if o) or None
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -32,17 +82,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("FLATNAV_SPARK_DRIVER_MEM", "48g"))
-        # pre-size the heap: the first heavy stage otherwise pays dozens of
-        # young GCs while G1 grows the heap from its small initial size
-        # (observed via -Xlog:gc during the zipf:200k merge); the cost
-        # lands inside the first timed build. 16g covers the measured
-        # ~13g peak at bench scale and is committed at session start,
-        # outside any timed region.
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("FLATNAV_SPARK_DRIVER_JAVA_OPTS", "-Xms16g"))
-        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", driver_mem)
     )
+    if java_opts is not None:
+        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
+    builder = builder.config("spark.ui.enabled", "false")
     # shuffle/spill scratch on tmpfs when available: the sandbox's virtual
     # disk shows multi-second stalls and writer contention; on a real
     # cluster this is the usual fast local SSD setting
@@ -52,7 +96,7 @@ def get_spark(
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -32,12 +32,16 @@ def zidx(spark, tmp_path_factory):
                        chunk_blocks=4, out_partitions=4)
 
 
-def test_repeat_batch_bit_identical_and_prunes_more(spark, zidx):
-    # num_partitions pinned to the multi-task regime this test is about:
-    # r6's data-sized pass partitioning runs this tiny fixture as ONE
-    # task, where cold task-local thresholds already prune maximally and
-    # "seeded prunes strictly more" (the scale property under test, which
-    # needs >1 task to be visible) vacuously fails
+def test_repeat_batch_bit_identical_and_prunes_more(spark, zidx, monkeypatch):
+    # pinned to the multi-task regime this test is about — the Spark pass
+    # (forced through the planner's regime constant) over 8 tasks: the
+    # planner answers this tiny fixture driver-direct as ONE stream, where
+    # cold thresholds already prune maximally and "seeded prunes strictly
+    # more" (the scale property under test, which needs >1 task to be
+    # visible) vacuously fails
+    import flatnav_spark.query as Q
+
+    monkeypatch.setattr(Q, "DIRECT_MAX_POSTINGS", 0)
     svc = StandingQueryService(spark, zidx, k=5, num_partitions=8)
     cold = svc.search_batch(QUERIES, collect_metrics=True)
     cold_m = svc.last_metrics
