@@ -1,7 +1,8 @@
 """Batched top-k query — the analog of flatnav's batched ``search``
 (python-bindings/src/flatnav/bindings.cpp:161-228: thread fan-out over
 queries against a shared read-only index). Here the read-only index is the
-postings parquet, and the per-query state is a numpy top-k heap per pass.
+postings parquet, and the per-query state is one row of (n_q, k) top-k
+arrays per pass.
 
 One planner (_candidates) answers every exact top-k call:
 
@@ -18,9 +19,13 @@ One planner (_candidates) answers every exact top-k call:
      mapInPandas scorer.
   3. the kernel (_make_partition_scorer) walks its chunks in order; per
      chunk it decodes every needed row's postings in ONE concatenated
-     varint pass, then scores the chunk's blocks ascending, accumulating
-     contributions for all queries in ascending term order per doc — the
-     determinism contract shared with flatnav_spark.reference. Because
+     varint pass, then scores the chunk's blocks ascending with a fixed
+     number of numpy calls per block: the block's active (run, query)
+     pairs, in run order = ascending term order, expand to postings and
+     ONE np.bincount accumulates them. bincount adds in input order from
+     0.0, so every (query, doc) cell sums its terms' contributions in
+     ascending term order — the determinism contract shared with
+     flatnav_spark.reference. Because
      chunk_id = doc_id // (block_range * chunk_blocks) is term-independent,
      a doc's full score is computed in exactly one task, so both regimes
      return the same float64 scores.
@@ -68,30 +73,6 @@ _UB_REL = 1e-9
 _UB_ABS = 1e-12
 
 DEFAULT_MAX_QUERIES_PER_PASS = 4096
-
-
-class _TopK:
-    """Per-query bounded result set with (score desc, doc_id asc) order."""
-
-    __slots__ = ("k", "doc_ids", "scores")
-
-    def __init__(self, k: int):
-        self.k = k
-        self.doc_ids = np.empty(0, dtype=np.int64)
-        self.scores = np.empty(0, dtype=np.float64)
-
-    def push(self, doc_ids: np.ndarray, scores: np.ndarray) -> None:
-        d = np.concatenate([self.doc_ids, doc_ids])
-        s = np.concatenate([self.scores, scores])
-        order = np.lexsort((d, -s))[: self.k]
-        self.doc_ids, self.scores = d[order], s[order]
-
-    def threshold(self) -> float:
-        """Score a candidate must beat (or tie) to enter: the k-th score,
-        or -inf while the set is not full."""
-        if self.scores.size < self.k:
-            return -np.inf
-        return float(self.scores[-1])
 
 
 class _QueryPlan:
@@ -174,10 +155,18 @@ def _make_partition_scorer(
     against CURRENT thresholds. Per-block memory stays
     O(block_range x active queries) float64 — active, not total.
 
-    The outer-product accumulate applies, per (query, doc) cell, exactly
-    one scalar IEEE add of w*tfn per term in ascending term order —
-    bit-identical to the reference scorer's sequential accumulation (IEEE
-    multiply commutes).
+    Each block costs a fixed number of numpy calls, whatever its runs and
+    queries: its (run, query) pairs whose query is active, kept in run
+    order, expand to postings with np.repeat, and one
+    np.bincount(cell, weights=tfn * w) over (active query, local doc)
+    cells accumulates them. bincount adds sequentially in input order,
+    starting from 0.0, and run order is ascending term order within a
+    chunk (each term has at most one run per block), so every cell gets
+    exactly one scalar IEEE add of w*tfn per term in ascending term order
+    — bit-identical to the reference scorer's sequential accumulation
+    (IEEE multiply commutes). The block's hits then merge into the
+    (n_q, k) top-k arrays with one lexsort on (query, -score, doc_id);
+    a doc lives in one block, so the order is total.
 
     WAND is counted at three grains (the M4 distance-computations analog):
     whole blocks, sub-runs ("segments" — the old (term, block) decode
@@ -205,7 +194,11 @@ def _make_partition_scorer(
     scorer = get_scorer(scorer_name)
 
     def score_partition(batches):
-        topk = [_TopK(k) for _ in range(n_q)]
+        # per-query top-k: row q holds fill[q] entries, (score desc,
+        # doc_id asc)
+        top_s = np.empty((n_q, k), dtype=np.float64)
+        top_d = np.empty((n_q, k), dtype=np.int64)
+        fill = np.zeros(n_q, dtype=np.int64)
         # per-query k-th score lower bound (global seed, then grown locally)
         thr = (seed_thr.astype(np.float64, copy=True) if seed_thr is not None
                else np.full(n_q, -np.inf))
@@ -222,6 +215,26 @@ def _make_partition_scorer(
         # skippable for EVERY query at once, but per-query column pruning
         # still saves the decode/accumulate/top-k work
         any_full = bool(np.isfinite(thr).any())  # any bound -> pruning can fire
+
+        def merge(q, d, sc) -> np.ndarray:
+            """Merge one block's candidates (q ascending) into the top-k
+            with one lexsort on (query, -score, doc); returns the queries
+            touched."""
+            qs, n_new = np.unique(q, return_counts=True)
+            f = fill[qs]
+            old = np.arange(k) < f[:, None]
+            all_q = np.concatenate((np.repeat(qs, f), q))
+            all_s = np.concatenate((top_s[qs][old], sc))
+            all_d = np.concatenate((top_d[qs][old], d))
+            o = np.lexsort((all_d, -all_s, all_q))
+            n_all = f + n_new
+            rank = np.arange(o.size) - np.repeat(np.cumsum(n_all) - n_all, n_all)
+            keep = rank < k
+            o, rank = o[keep], rank[keep]
+            top_s[all_q[o], rank] = all_s[o]
+            top_d[all_q[o], rank] = all_d[o]
+            fill[qs] = np.minimum(n_all, k)
+            return qs
 
         def do_chunk(pdf: pd.DataFrame) -> None:
             nonlocal n_scored, n_pruned, n_seg_scored, n_seg_pruned, any_full
@@ -261,7 +274,9 @@ def _make_partition_scorer(
             rel = np.arange(total, dtype=np.int64) - np.repeat(off, ln)
             pair_idx = row_start[run_row][exp_run] + rel
             q_of = qi_all[pair_idx]
-            cell = q_of * nb + run_bloc[exp_run]
+            w_of = plan.weights[flat[pair_idx]]
+            pair_bloc = run_bloc[exp_run]
+            cell = q_of * nb + pair_bloc
             present2d = np.zeros(n_q * nb, dtype=bool)
             present2d[cell] = True
             present2d = present2d.reshape(n_q, nb)
@@ -269,7 +284,6 @@ def _make_partition_scorer(
                 run_maxtf = np.concatenate(pdf["block_max_tf"].to_numpy()).astype(np.int64)
                 run_mindl = np.concatenate(pdf["block_min_dl"].to_numpy()).astype(np.int64)
                 tfn_up = scorer.tfn_upper(run_maxtf, run_mindl, avgdl, params)
-                w_of = plan.weights[flat[pair_idx]]
                 ub2d = np.bincount(
                     cell, weights=w_of * tfn_up[exp_run], minlength=n_q * nb
                 ).reshape(n_q, nb)
@@ -315,65 +329,67 @@ def _make_partition_scorer(
             run_slice_start = np.full(u, -1, dtype=np.int64)
             run_slice_start[run_dec] = d_run_start
 
+            # (run, query) pairs grouped by block; the stable sort keeps
+            # run order inside a block, and run_row is term-ascending, so
+            # each block's pairs stay in ascending term order
+            by_blk = np.argsort(pair_bloc, kind="stable")
+            blk_lo = np.searchsorted(pair_bloc[by_blk], np.arange(nb + 1))
+            p_run, p_q, p_w = exp_run[by_blk], q_of[by_blk], w_of[by_blk]
+            runs_in_blk = np.bincount(run_bloc, minlength=nb)
+            present_in_blk = present2d.sum(axis=0)
+
             # ---- walk the chunk's blocks ascending, freshest thresholds ----
-            # per block, runs must apply in ascending TERM order: run_row is
-            # already term-ascending, so a stable selection preserves it
             for b_loc in range(nb):
-                runs_b = np.flatnonzero(run_bloc == b_loc)
+                present = present2d[:, b_loc]
                 if prune and any_full:
-                    active = present2d[:, b_loc] & (ub2d[:, b_loc] >= thr_cmp)
+                    active = present & (ub2d[:, b_loc] >= thr_cmp)
                 else:
-                    active = present2d[:, b_loc]
-                n_qb_scored += int(active.sum())
-                n_qb_pruned += int((present2d[:, b_loc] & ~active).sum())
-                if not active.any():
+                    active = present
+                n_act = int(np.count_nonzero(active))
+                n_qb_scored += n_act
+                n_qb_pruned += int(present_in_blk[b_loc]) - n_act
+                if n_act == 0:
                     n_pruned += 1
-                    n_seg_pruned += runs_b.size
+                    n_seg_pruned += int(runs_in_blk[b_loc])
                     continue
                 n_scored += 1
-                base = int(blocks_present[b_loc]) * block_range
 
-                act = np.flatnonzero(active)
-                n_act = act.size
-                inv = np.full(n_q, -1, dtype=np.int64)
-                inv[act] = np.arange(n_act, dtype=np.int64)
-                acc = np.zeros((block_range, n_act), dtype=np.float64)
-                seen = np.zeros((block_range, n_act), dtype=bool)
-
-                scored_here = 0
-                for uu in runs_b.tolist():
-                    r = run_row[uu]
-                    sl = slice(row_start[r], row_start[r] + lens[r])
-                    qi = qi_all[sl]
-                    mask = active[qi]
-                    if not mask.any():
-                        continue
-                    scored_here += 1
-                    cols = inv[qi[mask]]
-                    w = plan.weights[flat[sl]][mask]
-                    p0 = run_slice_start[uu]
-                    p1 = p0 + run_count[uu]
-                    cell_ix = np.ix_(li_all[p0:p1], cols)
-                    acc[cell_ix] += np.multiply.outer(tfn_all[p0:p1], w)
-                    seen[cell_ix] = True
+                # the block's pairs whose query is active, in term order
+                lo, hi = blk_lo[b_loc], blk_lo[b_loc + 1]
+                sel = active[p_q[lo:hi]]
+                run, q, w = p_run[lo:hi][sel], p_q[lo:hi][sel], p_w[lo:hi][sel]
+                col = (np.cumsum(active) - 1)[q]
+                scored_here = 1 + int(np.count_nonzero(run[1:] != run[:-1]))
                 n_seg_scored += scored_here
-                n_seg_pruned += runs_b.size - scored_here
+                n_seg_pruned += int(runs_in_blk[b_loc]) - scored_here
 
-                for local, q_idx in enumerate(act):
-                    hit = np.flatnonzero(seen[:, local])
-                    if hit.size == 0:
-                        continue
-                    t = topk[q_idx]
-                    t.push(hit + base, acc[hit, local])
-                    new_thr = t.threshold()
-                    if new_thr != -np.inf:
-                        any_full = True
-                    # grow-only: never let a task-local k-th (e.g. right
-                    # after this task's top-k first fills) undercut the
-                    # global seed threshold
-                    if new_thr > thr[q_idx]:
-                        thr[q_idx] = new_thr
-                        thr_cmp[q_idx] = new_thr * approx_factor
+                # expand the pairs to postings and accumulate every (query,
+                # doc) cell with one bincount: it adds in input order from
+                # 0.0, so each cell gets one IEEE add of w*tfn per term in
+                # ascending term order — the reference's sequential sum
+                cnt = run_count[run]
+                ends = np.cumsum(cnt)
+                pos = (np.arange(ends[-1], dtype=np.int64)
+                       + np.repeat(run_slice_start[run] - (ends - cnt), cnt))
+                cell = np.repeat(col * block_range, cnt) + li_all[pos]
+                acc = np.bincount(cell, weights=tfn_all[pos] * np.repeat(w, cnt),
+                                  minlength=n_act * block_range)
+                seen = np.zeros(n_act * block_range, dtype=bool)
+                seen[cell] = True
+                hit = np.flatnonzero(seen)
+                qs = merge(np.flatnonzero(active)[hit // block_range],
+                           hit % block_range + int(blocks_present[b_loc]) * block_range,
+                           acc[hit])
+
+                # grow-only: never let a task-local k-th (e.g. right after
+                # this task's top-k first fills) undercut the global seed
+                full = qs[fill[qs] == k]
+                if full.size:
+                    any_full = True
+                    kth = top_s[full, k - 1]
+                    grow = kth > thr[full]
+                    thr[full[grow]] = kth[grow]
+                    thr_cmp[full[grow]] = kth[grow] * approx_factor
 
         carry: Optional[pd.DataFrame] = None
         for batch in batches:
@@ -403,29 +419,12 @@ def _make_partition_scorer(
         if acc_pairs_pruned is not None:
             acc_pairs_pruned.add(n_qb_pruned)
 
-        out_q, out_d, out_s = [], [], []
-        for q_idx in range(n_q):
-            t = topk[q_idx]
-            if t.doc_ids.size:
-                out_q.append(np.full(t.doc_ids.size, query_ids[q_idx], dtype=np.int64))
-                out_d.append(t.doc_ids)
-                out_s.append(t.scores)
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "doc_id": np.concatenate(out_d),
-                    "score": np.concatenate(out_s),
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.empty(0, dtype=np.int64),
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
+        filled = np.arange(k) < fill[:, None]
+        yield pd.DataFrame({
+            "query_id": np.repeat(np.asarray(query_ids, dtype=np.int64), fill),
+            "doc_id": top_d[filled],
+            "score": top_s[filled],
+        })
 
     return score_partition
 
@@ -522,10 +521,10 @@ def _score_floor_by_qid(qt_rows, m, scorer, k: int) -> Dict[int, float]:
     use10 = k <= 10 and "floor_dl10" in fields
     use100 = k <= 100 and "floor_dl100" in fields
 
-    def tfn1(dl: int) -> float:
-        return float(scorer.tfn(np.array([1]), np.array([dl]),
-                                m.avgdl, m.params)[0])
-
+    # both factors are pure in one value: computed once per distinct df
+    # and per distinct dl_eff, bit-identical to a call per row
+    weight_of: Dict[int, float] = {}
+    tfn1_of: Dict[int, float] = {}
     out: Dict[int, float] = {}
     for r in qt_rows:
         # tightest proven dl first: a term whose stats show a segment
@@ -542,7 +541,13 @@ def _score_floor_by_qid(qt_rows, m, scorer, k: int) -> Dict[int, float]:
             dl_eff = max_dl
         else:
             continue
-        b = scorer.weight(int(r["df"]), m.n_docs) * tfn1(dl_eff) * (1.0 - 1e-9)
+        df = int(r["df"])
+        if df not in weight_of:
+            weight_of[df] = scorer.weight(df, m.n_docs)
+        if dl_eff not in tfn1_of:
+            tfn1_of[dl_eff] = float(scorer.tfn(np.array([1]), np.array([dl_eff]),
+                                               m.avgdl, m.params)[0])
+        b = weight_of[df] * tfn1_of[dl_eff] * (1.0 - 1e-9)
         q = int(r["query_id"])
         if b > out.get(q, -np.inf):
             out[q] = b
@@ -667,10 +672,12 @@ def _pass_kernel(index, qt_rows, k, prune, scorer_name, counters,
     scorer = get_scorer(scorer_name)
     qids = sorted({r["query_id"] for r in qt_rows})
     q_index = {q: i for i, q in enumerate(qids)}
+    # weight is pure in df: one call per distinct df, not per row
+    weight_of = {df: scorer.weight(df, m.n_docs) for df in {int(r["df"]) for r in qt_rows}}
     qmap: Dict[str, List[Tuple[int, float]]] = {}
     for r in qt_rows:
-        w = scorer.weight(int(r["df"]), m.n_docs)
-        qmap.setdefault(r["term"], []).append((q_index[r["query_id"]], w))
+        qmap.setdefault(r["term"], []).append(
+            (q_index[r["query_id"]], weight_of[int(r["df"])]))
     plan = _QueryPlan(qmap)
     seed_thr = None
     if seed_thr_by_qid:

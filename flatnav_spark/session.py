@@ -2,7 +2,16 @@
 
 Local mode is the sandbox stand-in for a multi-executor cluster; the
 configuration below is what we'd ship in spark-defaults on a real
-cluster (AQE on, Arrow on, sane shuffle partitioning)."""
+cluster (AQE on, Arrow on, sane shuffle partitioning).
+
+Python workers start through flatnav_spark.worker_daemon, which imports
+pyspark from the interpreter's directory install instead of Spark's
+``pyspark.zip`` when the versions match: a zip on the path costs every
+task ~0.2 s in ``importlib.invalidate_caches()``. The directory (or zip)
+this package was imported from goes on the workers' PYTHONPATH so the
+daemon module can load before any ``--py-files`` ship; sessions here are
+``local[...]``, so driver and workers share one filesystem and one
+interpreter."""
 
 from __future__ import annotations
 
@@ -15,6 +24,8 @@ GIB = 1 << 30
 # the rest is left to the JVM's off-heap, the Python workers and tmpfs
 MAX_DRIVER_HEAP_GB = 48
 HEAP_SHARE = 0.5
+# the sys.path entry (directory or zip) this package was imported from
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # pre-size the heap: the first heavy stage otherwise pays dozens of young
 # GCs while G1 grows the heap from its small initial size (observed via
 # -Xlog:gc during the zipf:200k merge). 16g covers the measured ~13g peak
@@ -71,6 +82,11 @@ def get_spark(
     # a caller's JVM options extend ours (later flags win), never drop them
     caller_opts = extra_conf.pop("spark.driver.extraJavaOptions", None)
     java_opts = " ".join(o for o in (java_opts, caller_opts) if o) or None
+    # a caller's worker PYTHONPATH keeps its entries; the engine's is added
+    worker_path = [p for p in extra_conf.pop("spark.executorEnv.PYTHONPATH", "")
+                   .split(os.pathsep) if p]
+    if ENGINE_ROOT not in worker_path:
+        worker_path.append(ENGINE_ROOT)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -83,6 +99,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_mem)
+        .config("spark.python.daemon.module", "flatnav_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(worker_path))
     )
     if java_opts is not None:
         builder = builder.config("spark.driver.extraJavaOptions", java_opts)

@@ -150,3 +150,28 @@ def test_sampled_term_chunk_range_matches_repartition_by_range(spark, tmp_path):
     rows_a = sorted(map(tuple, idx_a.postings(spark).select(*cols).collect()))
     rows_b = sorted(map(tuple, idx_b.postings(spark).select(*cols).collect()))
     assert rows_a == rows_b
+
+
+def test_segment_sampler_empty_part_falls_back(tmp_path):
+    """A generation whose sampled part files hold no rows (optimizing an
+    index built from an empty corpus) gives no boundaries — None, the
+    caller's fallback — whatever ``min_rows`` is, never an error from
+    concatenating or indexing an empty sample. pyarrow only."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flatnav_spark.partitioning import sample_segment_key_boundaries
+
+    longs = pa.list_(pa.int64())
+    schema = pa.schema([
+        ("term", pa.string()), ("chunk_id", pa.int64()), ("n", pa.int32()),
+        ("block_ids", longs), ("block_counts", pa.list_(pa.int32())),
+        ("block_max_tf", longs), ("block_min_dl", longs),
+        ("docs_bin", pa.binary()), ("tfs_bin", pa.binary()), ("dls_bin", pa.binary()),
+        ("sum_tf", pa.int64()), ("payload_len", pa.int64()), ("max_dl", pa.int64()),
+    ])
+    gen = tmp_path / "postings_0"
+    gen.mkdir()
+    pq.write_table(schema.empty_table(), str(gen / "part-00000.parquet"))
+    assert sample_segment_key_boundaries([str(gen)], 4) is None
+    assert sample_segment_key_boundaries([str(gen)], 4, min_rows=0) is None

@@ -2,10 +2,14 @@
 heap must fit the memory actually available (a 48g heap with -Xms16g
 cannot be committed on a 15 GB host and the JVM dies before Spark
 starts), explicit settings pass through unchanged, and a caller's JVM
-options extend the engine's rather than replacing them. No JVM starts
+options extend the engine's rather than replacing them. Python workers
+start through the engine's worker daemon unless the caller picks another,
+and a caller's worker PYTHONPATH is extended, not replaced. No JVM starts
 here: the builder's options are read back instead."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -75,3 +79,23 @@ def test_host_sized_defaults_and_merged_java_opts(monkeypatch):
     opts = _builder_options(monkeypatch, {"FLATNAV_SPARK_DRIVER_JAVA_OPTS": "-Xms1g"},
                             extra_conf={"spark.driver.extraJavaOptions": "-Dx=1"})
     assert opts["spark.driver.extraJavaOptions"] == "-Xms1g -Dx=1"
+
+
+def test_worker_daemon_and_pythonpath(monkeypatch):
+    opts = _builder_options(monkeypatch, {})
+    assert opts["spark.python.daemon.module"] == "flatnav_spark.worker_daemon"
+    assert opts["spark.executorEnv.PYTHONPATH"] == session.ENGINE_ROOT
+    assert os.path.isfile(os.path.join(session.ENGINE_ROOT, "flatnav_spark", "worker_daemon.py"))
+
+
+def test_caller_pythonpath_merged(monkeypatch):
+    opts = _builder_options(monkeypatch, {}, extra_conf={
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(["/deps/a", "/deps/b"])})
+    assert opts["spark.executorEnv.PYTHONPATH"] == os.pathsep.join(
+        ["/deps/a", "/deps/b", session.ENGINE_ROOT])
+
+
+def test_caller_daemon_module_wins(monkeypatch):
+    opts = _builder_options(monkeypatch, {},
+                            extra_conf={"spark.python.daemon.module": "pyspark.daemon"})
+    assert opts["spark.python.daemon.module"] == "pyspark.daemon"
